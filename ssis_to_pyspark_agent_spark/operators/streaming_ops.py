@@ -81,13 +81,13 @@ def stream_parquet_sink(spark: SparkSession, inputs, config, context) -> DataFra
     """Production-shaped streaming sink: foreachBatch writing parquet with
     a checkpoint dir (exactly-once via batch-id idempotence; on Delta the
     same foreachBatch does MERGE). Runs the bounded stream to completion
-    and returns the written data. `state_partitions` (int or 'auto' with
-    `expected_live_keys`) scopes the stateful shuffle-partition count for
-    this query's START only (see streaming.runner._state_partitions)."""
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        _state_partitions,
-        resolve_state_partitions,
-    )
+    and returns the written data. The stateful shuffle width (the
+    state-store count) is derived from the bytes of the plan's file
+    sources — ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes),
+    clamped to [1, spark.sql.shuffle.partitions]; an unsizable source
+    keeps the session width — and scoped around this query's START only
+    (see streaming.runner._state_partitions)."""
+    from ssis_to_pyspark_agent_spark.streaming.runner import _state_partitions
 
     path = config["path"]
     checkpoint = config.get("checkpoint", path.rstrip("/") + "._checkpoint")
@@ -96,7 +96,7 @@ def stream_parquet_sink(spark: SparkSession, inputs, config, context) -> DataFra
     def write_batch(batch_df, batch_id: int) -> None:
         batch_df.write.mode(mode).parquet(path)
 
-    with _state_partitions(spark, resolve_state_partitions(config)):
+    with _state_partitions(inputs[0]):
         q = (
             inputs[0]
             .writeStream.foreachBatch(write_batch)
@@ -116,15 +116,14 @@ def memory_stream_sink(spark: SparkSession, inputs, config, context) -> DataFram
     """Drive the streaming plan to completion into an in-memory table and
     return the (batch) result. For production use foreachBatch/parquet
     sinks with checkpointing; this is the synchronous test/demo sink.
-    `state_partitions` (int or 'auto' with `expected_live_keys`) scopes
-    the stateful shuffle-partition count around query START only — the
+    The stateful shuffle width is ceil(bytes of the plan's file sources /
+    spark.sql.adaptive.advisoryPartitionSizeInBytes), clamped to
+    [1, spark.sql.shuffle.partitions] (an unsizable source keeps the
+    session width), and is scoped around query START only — the
     synchronous drain runs with the session conf restored, so batch jobs
     planned meanwhile (another thread, a foreachBatch body) don't
-    inherit the streaming override (round-8 ADVICE item)."""
+    inherit the streaming override."""
     from ssis_to_pyspark_agent_spark.streaming import run_stream_to_memory
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        resolve_state_partitions,
-    )
 
     # key is `table`, not `name`: step config kwargs must not collide with
     # Pipeline.step(name=...)
@@ -132,6 +131,5 @@ def memory_stream_sink(spark: SparkSession, inputs, config, context) -> DataFram
     run_stream_to_memory(
         inputs[0], name,
         output_mode=config.get("output_mode", "append"),
-        state_partitions=resolve_state_partitions(config),
     )
     return spark.table(name)

@@ -4348,14 +4348,7 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
         .step("j", "stream.join", ["views", "buys"], keys=["user_id"],
               left_ts="v_ts", right_ts="b_ts",
               watermark="5 minutes", time_bound="10 minutes")
-        # state_partitions=8: the join keeps 4 state stores per shuffle
-        # partition per micro-batch, each paying fixed WAL/commit cost —
-        # at the 32-partition batch default that bookkeeping WAS the
-        # query (16.4s -> 5.4s at 8, identical rows) and the dominant
-        # q78 sample variance. Sized to keys-per-watermark-window here;
-        # a real deployment sizes it to state volume, not cluster width.
-        .step("out", "sink.memory_stream", "j", table="q78_out",
-              state_partitions=8)
+        .step("out", "sink.memory_stream", "j", table="q78_out")
     )
     res = run_pipeline(spark, p).df("out")
     return res.select(

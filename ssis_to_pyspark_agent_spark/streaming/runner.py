@@ -16,11 +16,14 @@ a static dim, union) works unchanged on a streaming DataFrame.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssis_to_pyspark_agent_spark.operators.agg import build_aggs
 from ssis_to_pyspark_agent_spark.operators.sources_sinks import normalize_event_time
+from ssis_to_pyspark_agent_spark.sources.catalog import read_parquet
 
 
 def stream_events(
@@ -35,7 +38,8 @@ def stream_events(
     same way as the batch source (long nanos -> micros)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
-        schema = spark.read.parquet(path).schema  # one cheap footer read
+        # the session schema memo: footer inference runs once per path
+        schema = read_parquet(spark, path, nanos_as_long=True).schema
     r = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
@@ -129,99 +133,101 @@ def stream_stream_join(
     return joined.drop(*[F.col(f"r.{k}") for k in keys])
 
 
-class _state_partitions:
-    """Scope `spark.sql.shuffle.partitions` around a streaming-query
-    START. Stateful streaming operators allocate one state store per
-    shuffle partition per stateful op PER MICRO-BATCH (a stream-stream
-    join keeps FOUR stores per partition), and each store pays fixed
-    WAL/commit/maintenance overhead every batch regardless of rows — at
-    the cluster default of 32+ partitions a 59-row join spends its whole
-    wall time on store bookkeeping (measured 16.4s -> 2.9s at 4
-    partitions, identical output). Size to expected KEYS PER WATERMARK
-    WINDOW, not to the batch-side cluster default; the setting is
-    captured into the query's checkpoint at first start, so it is also
-    the one knob that CANNOT be changed later without a new checkpoint.
-    Restoring after start is safe — StreamExecution clones the session
-    conf when the query starts. ONLY ``.start()`` belongs inside the
-    scope: holding it across the synchronous drain would leak the
-    override to every batch job another thread plans meanwhile."""
+def _file_source_bytes(df: DataFrame) -> int | None:
+    """Bytes of the files a bounded streaming plan reads: the sum over
+    its ``StreamingRelation`` leaves (file sources: ``path`` plus
+    ``pathGlobFilter``), listed through the Hadoop FileSystem — no Spark
+    job. None when any streaming leaf is not a listable file source
+    (rate, socket, kafka, a missing or glob path)."""
+    from py4j.protocol import Py4JJavaError
 
-    def __init__(self, spark: SparkSession, n):
-        self.spark, self.n, self.old = spark, n, None
+    from ssis_to_pyspark_agent_spark.fs import hadoop_fs
 
-    def __enter__(self):
-        if self.n is not None:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", str(int(self.n)))
-
-    def __exit__(self, *exc):
-        if self.old is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-
-
-#: 'auto' sizing constant — the K x P sweep (PLANS.md round-9) measured
-#: state-store cost ~linear in P (~25-40 ms WAL/commit per store per
-#: micro-batch) with the more-partitions crossover NOT reached even at
-#: 200k live keys on local[32]: a partition comfortably holds ~1M keys
-#: of small per-key state before memory pressure argues for more.
-_KEYS_PER_STATE_PARTITION = 1_000_000
-
-
-def resolve_state_partitions(config: dict):
-    """Resolve a sink's ``state_partitions`` config: an int passes
-    through, ``'auto'`` applies the sweep-pinned rule
-    ``max(ceil(expected_live_keys / ~1M), min_parallelism)`` — size to
-    live keys per watermark horizon, never to cluster width. 'auto'
-    REQUIRES ``expected_live_keys`` (explicit beats guessing: the
-    engine cannot know the key cardinality of an unbounded source);
-    ``min_parallelism`` (default 1) floors at the cores a batch's CPU
-    actually needs."""
-    n = config.get("state_partitions")
-    if n != "auto":
-        # validate HERE, with the config key named — deferring to the
-        # int() inside _state_partitions raises a bare "invalid literal"
-        # at query-start time, far from the config mistake ('Auto', 2.7,
-        # ... — round-10 self-review). bool is an int subclass; reject.
-        if n is None:
+    spark = df.sparkSession
+    total = 0
+    leaves = df._jdf.logicalPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue  # a static side (stream-static lookup) holds no state
+        if leaf.nodeName() != "StreamingRelation":
             return None
-        if isinstance(n, bool) or not isinstance(n, int):
-            raise ValueError(
-                f"state_partitions must be an int or 'auto', got {n!r}"
+        opts = leaf.dataSource().options()
+        if not opts.contains("path"):
+            return None
+        glob = opts.get("pathGlobFilter")
+        try:
+            fs, _, root = hadoop_fs(spark, opts.apply("path"))
+            accept = (
+                spark._jvm.org.apache.hadoop.fs.GlobFilter(glob.get()).accept
+                if glob.isDefined() else None
             )
-        if n < 1:
-            raise ValueError(
-                f"state_partitions must be >= 1, got {n}"
-            )
-        return n
-    keys = config.get("expected_live_keys")
-    if keys is None:
-        raise ValueError(
-            "state_partitions='auto' requires expected_live_keys (the "
-            "key cardinality per watermark horizon) — pass an integer "
-            "state_partitions to size by hand"
-        )
-    keys = int(keys)
-    if keys < 0:
-        raise ValueError(f"expected_live_keys must be >= 0, got {keys}")
-    floor = int(config.get("min_parallelism", 1))
-    if floor < 1:
-        raise ValueError(f"min_parallelism must be >= 1, got {floor}")
-    return max(-(-keys // _KEYS_PER_STATE_PARTITION), floor)
+            files = fs.listFiles(root, True)
+            while files.hasNext():
+                st = files.next()
+                name = st.getPath().getName()
+                if not name.startswith(("_", ".")) and (
+                    accept is None or accept(st.getPath())
+                ):
+                    total += st.getLen()
+        except Py4JJavaError:
+            return None
+    return total
+
+
+def state_partitions_for(df: DataFrame) -> int:
+    """Stateful shuffle width for a bounded streaming query:
+    ``clamp(ceil(source bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes),
+    1, spark.sql.shuffle.partitions)`` — the batch engine's partition
+    target applied to the replayed input. Stateful operators open one
+    state store per shuffle partition per micro-batch (a stream-stream
+    join opens four), each paying fixed WAL/commit/maintenance cost
+    whatever its row count; the round-9 sweep (PLANS.md) measured that
+    cost as linear in the partition count, with the fewest partitions
+    fastest at every key count it tried. A plan whose sources cannot be
+    sized keeps the session width."""
+    spark = df.sparkSession
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    size = _file_source_bytes(df)
+    if size is None:
+        return width
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return min(max(-(-size // target), 1), width)
+
+
+@contextmanager
+def _state_partitions(df: DataFrame):
+    """Scope ``spark.sql.shuffle.partitions`` to
+    ``state_partitions_for(df)`` around a streaming-query START. The
+    width is captured into the query's checkpoint at first start (it is
+    the state-store count, and cannot change later without a new
+    checkpoint); restoring after start is safe because StreamExecution
+    clones the session conf when the query starts. ONLY ``.start()``
+    belongs inside the scope: holding it across the synchronous drain
+    would leak the override to every batch job another thread plans
+    meanwhile."""
+    spark = df.sparkSession
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions_for(df)))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def run_stream_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "append",
-    state_partitions: int | None = None,
 ) -> None:
     """Drive a (bounded-source) streaming DataFrame to completion into an
-    in-memory table `name` — synchronous, for tests/smoke.
-    ``state_partitions`` scopes the stateful shuffle-partition count
-    around ``.start()`` ONLY (see _state_partitions) — the drain runs
-    with the session conf restored."""
-    with _state_partitions(df.sparkSession, state_partitions):
+    in-memory table `name` — synchronous, for tests/smoke. The stateful
+    shuffle width is derived from the source size and scoped around
+    ``.start()`` ONLY (see _state_partitions) — the drain runs with the
+    session conf restored."""
+    with _state_partitions(df):
         q = (
             df.writeStream.outputMode(output_mode)
             .format("memory")

@@ -210,13 +210,11 @@ def test_stream_stream_join_matches_batch(spark, batch_events):
 
 
 def test_state_partitions_scoped_and_restored(spark, batch_events):
-    """round-7 verdict item 4: `state_partitions` on a streaming sink
-    scopes spark.sql.shuffle.partitions around query start (captured
-    into the query's checkpoint = the state-store count), restores the
-    session conf, and changes NOTHING about the result. The knob is the
-    q78 variance fix — 4 state stores per partition per micro-batch
-    each pay fixed WAL/commit cost, so store count ∝ wall time on
-    small-state joins."""
+    """A streaming sink scopes spark.sql.shuffle.partitions to the
+    derived state width around query start (captured into the query's
+    checkpoint = the state-store count), restores the session conf, and
+    changes NOTHING about the result of a stream-stream join, which
+    keeps 4 state stores per partition per micro-batch."""
     from ssis_to_pyspark_agent_spark.operators import get_operator
     from ssis_to_pyspark_agent_spark.streaming.runner import (
         stream_events,
@@ -242,7 +240,7 @@ def test_state_partitions_scoped_and_restored(spark, batch_events):
     )
     out = get_operator("sink.memory_stream")(
         spark, [joined],
-        {"table": "t_ssj_sp", "state_partitions": 2}, {},
+        {"table": "t_ssj_sp"}, {},
     )
     got = {(r["v_id"], r["b_id"])
            for r in out.select("v_id", "b_id").collect()}
@@ -263,35 +261,43 @@ def test_state_partitions_scoped_and_restored(spark, batch_events):
 
 
 def test_state_partitions_parquet_sink(spark, tmp_path, batch_events):
-    """The foreachBatch parquet sink honors state_partitions the same
+    """The foreachBatch parquet sink derives the state width the same
     way the memory sink does: conf scoped around start, restored after,
-    stateful results unchanged (windowed agg here)."""
+    stateful results unchanged (windowed agg here). The advisory
+    partition size is lowered to half the source so the derived width
+    (2) differs from both the default (1) and the session width (4)."""
+    import os
+
     from ssis_to_pyspark_agent_spark.operators import get_operator
     from ssis_to_pyspark_agent_spark.streaming.runner import (
         stream_events,
         windowed_agg,
     )
 
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get("spark.sql.shuffle.partitions")
+    before_advisory = spark.conf.get(advisory)
     agg = windowed_agg(
         stream_events(spark, EVENTS, max_files_per_trigger=1),
         ts_col="ts", window="10 minutes", aggs={"n": ("count", "*")},
     )
-    out = get_operator("sink.stream_parquet")(
-        spark, [agg],
-        {"path": str(tmp_path / "out"), "mode": "append",
-         "checkpoint": str(tmp_path / "ckpt"), "state_partitions": 2},
-        {},
-    )
+    spark.conf.set(advisory, str(os.path.getsize(EVENTS) // 2 + 1))
+    try:
+        out = get_operator("sink.stream_parquet")(
+            spark, [agg],
+            {"path": str(tmp_path / "out"), "mode": "append",
+             "checkpoint": str(tmp_path / "ckpt")},
+            {},
+        )
+    finally:
+        spark.conf.set(advisory, before_advisory)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # the override actually LANDED in the state store layout — .start()
-    # clones the session synchronously, so restoring the conf right
-    # after it cannot race the streaming thread's capture (probed
-    # empirically round-10; this pins it)
+    # the derived width actually LANDED in the state store layout —
+    # .start() clones the session synchronously, so restoring the conf
+    # right after it cannot race the streaming thread's capture
     state0 = tmp_path / "ckpt" / "state" / "0"
     # digit-named dirs only: a Spark version adding other metadata
     # entries under state/0 must not fail the partition-count assertion
-    # (ADVICE r10)
     part_dirs = [p.name for p in state0.iterdir() if p.name.isdigit()]
     assert sorted(part_dirs) == ["0", "1"]
     batch = windowed_agg(
@@ -306,13 +312,13 @@ def test_state_partitions_parquet_sink(spark, tmp_path, batch_events):
 
 
 def test_state_partitions_scoped_to_start_only(spark, monkeypatch):
-    """round-9 verdict item 2a: the override must be live exactly at
-    query START (that's when it's captured into the checkpoint = the
-    state-store count) and RESTORED before the synchronous drain — the
-    old memory sink held the session-global override across the whole
-    processAllAvailable(), so batch jobs planned meanwhile (another
-    thread, a foreachBatch body) silently inherited the streaming
-    partition count."""
+    """The derived width must be live exactly at query START (that's
+    when it's captured into the checkpoint = the state-store count) and
+    RESTORED before the synchronous drain — a sink that held the
+    session-global override across the whole processAllAvailable()
+    would let batch jobs planned meanwhile (another thread, a
+    foreachBatch body) silently inherit the streaming partition
+    count."""
     from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
     from ssis_to_pyspark_agent_spark.operators import get_operator
@@ -337,65 +343,52 @@ def test_state_partitions_scoped_to_start_only(spark, monkeypatch):
         ts_col="ts", window="10 minutes", aggs={"n": ("count", "*")},
     )
     get_operator("sink.memory_stream")(
-        spark, [agg], {"table": "t_scope_drain", "state_partitions": 3}, {},
+        spark, [agg], {"table": "t_scope_drain"}, {},
     )
-    assert seen["at_start"] == "3"          # captured into the checkpoint
+    assert before != "1"
+    assert seen["at_start"] == "1"          # captured into the checkpoint
     assert seen["during_drain"] == before   # restored BEFORE the drain
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_resolve_state_partitions_auto():
-    """round-9 verdict item 6: state_partitions='auto' applies the
-    sweep-pinned rule ceil(expected_live_keys / ~1M) floored at
-    min_parallelism; ints pass through untouched; 'auto' without the
-    declared cardinality is a config error (explicit beats guessing)."""
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        resolve_state_partitions,
-    )
+def _capture_queries(monkeypatch):
+    """Wrap DataStreamWriter.start to collect every query it starts."""
+    from pyspark.sql.streaming import DataStreamWriter
 
-    # int/None pass-through (q43/q78 configs unchanged)
-    assert resolve_state_partitions({"state_partitions": 8}) == 8
-    assert resolve_state_partitions({}) is None
-    # the sweep's shapes: every measured K (100 / 10k / 200k live keys)
-    # lands on the table's winning small-P answer
-    for keys in (100, 10_000, 200_000):
-        assert resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": keys}) == 1
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 1_000_000}) == 1
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 1_000_001}) == 2
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 3_500_000}) == 4
-    # floored at the cores the batch CPU needs, never below
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 100,
-         "min_parallelism": 8}) == 8
-    with pytest.raises(ValueError, match="expected_live_keys"):
-        resolve_state_partitions({"state_partitions": "auto"})
-    with pytest.raises(ValueError, match=">= 0"):
-        resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": -1})
-    with pytest.raises(ValueError, match="min_parallelism"):
-        resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": 5,
-             "min_parallelism": 0})
+    started = []
+    orig_start = DataStreamWriter.start
+
+    def start(self, *a, **kw):
+        q = orig_start(self, *a, **kw)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return started
 
 
-def test_state_partitions_auto_end_to_end(spark, batch_events):
-    """'auto' on a real sink: declared 50 live users -> 1 partition;
-    results identical to the batch oracle."""
+def _store_instances(q):
+    return [op["numStateStoreInstances"]
+            for op in q.lastProgress["stateOperators"]]
+
+
+def test_state_partitions_derived_end_to_end(spark, batch_events,
+                                              monkeypatch):
+    """A memory sink with no sizing config runs the sf0.001 window agg
+    on one state store (one partition x one store), and the results
+    are identical to the batch oracle."""
     from ssis_to_pyspark_agent_spark.operators import get_operator
 
+    started = _capture_queries(monkeypatch)
     agg = windowed_agg(
         stream_events(spark, EVENTS, max_files_per_trigger=1),
         ts_col="ts", window="10 minutes", aggs={"n": ("count", "*")},
     )
     out = get_operator("sink.memory_stream")(
-        spark, [agg],
-        {"table": "t_auto_sp", "state_partitions": "auto",
-         "expected_live_keys": 50, "output_mode": "complete"}, {},
+        spark, [agg], {"table": "t_derived_sp", "output_mode": "complete"},
+        {},
     )
+    assert len(started) == 1 and _store_instances(started[0]) == [1]
     batch = windowed_agg(
         batch_events, ts_col="ts", window="10 minutes",
         aggs={"n": ("count", "*")},
@@ -405,14 +398,100 @@ def test_state_partitions_auto_end_to_end(spark, batch_events):
     assert got == expect
 
 
-def test_resolve_state_partitions_rejects_junk():
-    """Non-int, non-None, non-'auto' values are config errors named at
-    the key — not a bare int() ValueError at query-start (round-10
-    self-review)."""
+def test_state_partitions_rule(spark, tmp_path):
+    """ceil(source bytes / advisory partition size), clamped to
+    [1, spark.sql.shuffle.partitions]; an unsizable source keeps the
+    session width."""
+    import os
+
+    from ssis_to_pyspark_agent_spark.operators import get_operator
     from ssis_to_pyspark_agent_spark.streaming.runner import (
-        resolve_state_partitions,
+        state_partitions_for,
     )
 
-    for bad in ("Auto", "atuo", 2.7, True, 0, -3):
-        with pytest.raises(ValueError, match="state_partitions"):
-            resolve_state_partitions({"state_partitions": bad})
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width > 3
+    agg = windowed_agg(
+        stream_events(spark, EVENTS, max_files_per_trigger=1),
+        ts_col="ts", window="10 minutes", aggs={"n": ("count", "*")},
+    )
+    # the sf0.001 events file is far below the 64 MB default target
+    assert state_partitions_for(agg) == 1
+    get_operator("sink.stream_parquet")(
+        spark, [agg],
+        {"path": str(tmp_path / "out"), "checkpoint": str(tmp_path / "ckpt")},
+        {},
+    )
+    state0 = tmp_path / "ckpt" / "state" / "0"
+    assert [p.name for p in state0.iterdir() if p.name.isdigit()] == ["0"]
+
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(advisory)
+    size = os.path.getsize(EVENTS)
+    try:
+        spark.conf.set(advisory, str(size // 3 + 1))
+        assert state_partitions_for(agg) == 3
+        spark.conf.set(advisory, "1")
+        assert state_partitions_for(agg) == width
+    finally:
+        spark.conf.set(advisory, before)
+    assert state_partitions_for(agg) == 1
+
+    rate = spark.readStream.format("rate").load()
+    assert state_partitions_for(rate.groupBy("value").count()) == width
+
+
+def test_q78_state_store_budget(spark, sf_dir, batch_events, monkeypatch):
+    """q78 at fixture scale: one state partition, so the stream-stream
+    join opens 4 state stores per micro-batch, over 2 micro-batches (the
+    data batch and the watermark-eviction batch), and its rows equal the
+    batch join. A hand-set width coming back would multiply the store
+    count, and the fixed per-store cost with it."""
+    from ssis_to_pyspark_agent_spark.queries import QUERIES
+
+    started = _capture_queries(monkeypatch)
+    got = QUERIES["q78_stream_stream_join"](spark, sf_dir)
+    assert len(started) == 1
+    q = started[0]
+    assert _store_instances(q) == [4]
+    assert len(q.recentProgress) == 2
+
+    v = batch_events.filter(F.col("event_type") == "view").alias("v")
+    b = batch_events.filter(F.col("event_type") == "purchase").alias("b")
+    want = v.join(
+        b,
+        (F.col("v.user_id") == F.col("b.user_id"))
+        & (F.col("b.ts") >= F.col("v.ts"))
+        & (F.col("b.ts") <= F.col("v.ts") + F.expr("INTERVAL 10 minutes")),
+    ).select(
+        F.col("v.user_id").alias("user_id"),
+        F.col("v.event_id").alias("v_id"),
+        F.col("b.event_id").alias("b_id"),
+        (F.unix_timestamp("b.ts") - F.unix_timestamp("v.ts"))
+        .cast("bigint").alias("lag_s"),
+    )
+    assert want.count() > 0
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_stream_events_schema_memo(spark):
+    """stream_events takes its schema from the session memo: a second
+    call on an unchanged path submits no Spark job (a bare
+    spark.read.parquet(path).schema submits one every time)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return tracker.getJobIdsForGroup(group)
+
+    stream_events(spark, EVENTS)
+    assert jobs_in("stream_events_memo", lambda: stream_events(spark, EVENTS)) == []
+    # the counter sees an inference job when there is one
+    assert jobs_in("stream_events_infer",
+                   lambda: spark.read.parquet(EVENTS).schema) != []

@@ -2268,105 +2268,6 @@ def probe_band_compact(spark, n_rows=20_000_000, bands=16, appends=8):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def probe_state_partitions(spark, n_events=400_000):
-    """Pin the state_partitions sizing rule's SHAPE (round-9 item 6):
-    sweep live-key cardinality x state_partitions for the two stateful
-    shapes — stream-stream join (4 state stores per partition per
-    micro-batch) and tumbling window agg (1 store). The round-8 rule
-    ("size to live keys per watermark horizon, not cluster width") was
-    asserted from one query (q78, 59 output rows); this measures WHERE
-    more partitions start winning as keys grow.
-
-    Fixture: n_events rows over a 2-hour span in 8 contiguous-time
-    parquet files (one micro-batch each at maxFilesPerTrigger=1);
-    events come in (view, purchase) pairs sharing user_id =
-    (id div 2) mod K so every view has >= 1 in-window partner at every
-    K (a first cut used id mod K with alternating types — views got
-    even residues, purchases odd, and the join was silently EMPTY).
-    K sweeps 1e2 / 1e4 / n-cap; partitions sweep 2 / 8 / 32 / 128.
-    Output rows are P-invariant (asserted)."""
-    import shutil
-    import tempfile
-
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        stream_events,
-        stream_stream_join,
-        windowed_agg,
-    )
-
-    base = tempfile.mkdtemp(prefix="spark_graft_ssp_")
-    sink = get_operator("sink.memory_stream")
-    results = []
-    try:
-        for kk in (100, 10_000, n_events // 2):
-            K = min(kk, n_events // 2)
-            path = f"{base}/ev_{K}"
-            (
-                spark.range(n_events)
-                .select(
-                    ((F.col("id") / 2).cast("long") % K).alias("user_id"),
-                    F.timestamp_seconds(
-                        F.lit(1_700_000_000)
-                        + (F.col("id") * 7200 / n_events).cast("long")
-                    ).alias("ts"),
-                    F.when(F.col("id") % 2 == 0, "view")
-                    .otherwise("purchase").alias("event_type"),
-                    F.col("id").alias("event_id"),
-                )
-                .coalesce(8)
-                .write.mode("overwrite").parquet(path)
-            )
-            for shape in ("join", "window"):
-                rows_ref = None
-                for P in (2, 8, 32, 128):
-                    t0 = time.perf_counter()
-                    if shape == "join":
-                        ev = stream_events(spark, path)
-                        views = ev.filter("event_type = 'view'").select(
-                            "user_id", F.col("ts").alias("v_ts"),
-                            F.col("event_id").alias("v_id"))
-                        buys = stream_events(spark, path).filter(
-                            "event_type = 'purchase'").select(
-                            "user_id", F.col("ts").alias("b_ts"),
-                            F.col("event_id").alias("b_id"))
-                        j = stream_stream_join(
-                            views, buys, keys=["user_id"],
-                            left_ts="v_ts", right_ts="b_ts",
-                            watermark="1 minute",
-                            time_bound="30 seconds")
-                    else:
-                        j = windowed_agg(
-                            stream_events(spark, path), "ts",
-                            "10 minutes", {"n": ("count", "*")},
-                            keys=["user_id"], watermark="5 minutes")
-                    out = sink(
-                        spark, [j],
-                        {"table": f"ssp_{shape}_{K}_{P}",
-                         "state_partitions": P}, {})
-                    n = out.count()
-                    dt = time.perf_counter() - t0
-                    if rows_ref is None:
-                        rows_ref = n
-                    assert n == rows_ref, (shape, K, P, n, rows_ref)
-                    results.append((shape, K, P, dt, n))
-                    print(
-                        f"PROBE state_partitions: shape={shape} K={K} "
-                        f"P={P} t={dt:.1f}s rows={n}"
-                    )
-        for shape in ("join", "window"):
-            best = {}
-            for s, K, P, dt, _ in results:
-                if s == shape and (K not in best or dt < best[K][1]):
-                    best[K] = (P, dt)
-            print(
-                f"PROBE state_partitions[{shape}]: best P by K = "
-                + ", ".join(f"K={k}: P={v[0]} ({v[1]:.1f}s)"
-                            for k, v in sorted(best.items()))
-            )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def main():
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
     spark = get_spark(
@@ -2449,8 +2350,6 @@ def main():
         probe_media(spark)
     if which in ("band_compact", "all"):
         probe_band_compact(spark)
-    if which in ("state_partitions", "all"):
-        probe_state_partitions(spark)
 
 
 if __name__ == "__main__":
