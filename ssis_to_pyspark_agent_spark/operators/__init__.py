@@ -41,6 +41,30 @@ def list_operators() -> list[str]:
     return sorted(_REGISTRY)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A typed driver-built frame (``rows``: tuples in ``schema`` field
+    order; ``schema``: StructType or DDL string) planned as a JVM
+    ``LocalRelation``. The rows go through a pyarrow Table typed from
+    the Spark schema, never ``createDataFrame(list)`` — that plans a
+    Python-backed ``LogicalRDD`` whose every scan starts Python worker
+    tasks (NOTES invariant 23)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(list(c), type=to_arrow_type(f.dataType))
+            for f, c in zip(schema.fields, cols)
+        ],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # Import all operator modules so their @operator registrations run.
 from ssis_to_pyspark_agent_spark.operators import (  # noqa: E402,F401
     agg,

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ssis_to_pyspark_agent_spark.operators import operator
+from ssis_to_pyspark_agent_spark.operators import local_frame, operator
 
 # Mersenne prime 2^61-1: the classic universal-hash modulus for MinHash.
 _P = (1 << 61) - 1
@@ -378,7 +378,8 @@ def _bucket_pairs_plan(tagged, agg, bucket_cols, cap, hot, _self_join,
         return result
     # hot buckets: distributed self-join (see docstring)
     hot_df = F.broadcast(
-        tagged.sparkSession.createDataFrame(
+        local_frame(
+            tagged.sparkSession,
             [tuple(r[c] for c in bucket_cols) for r in hot],
             tagged.select(*bucket_cols).schema,
         )
@@ -753,8 +754,8 @@ def _driver_cc_labels(spark, rows, id_field) -> DataFrame:
         StructField("x", id_field.dataType),
         StructField("comp", id_field.dataType),
     ])
-    return spark.createDataFrame(
-        [(x, comp_min[find(x)]) for x in parent], schema
+    return local_frame(
+        spark, [(x, comp_min[find(x)]) for x in parent], schema
     )
 
 
@@ -2977,15 +2978,15 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         # empty corpus: no centroids exist, so short-circuit with empty
         # ports of the documented shapes (the assignment kernel cannot
         # run against a 0-row centroid matrix)
-        empty_pairs = spark.createDataFrame(
-            [], f"a {id_type}, b {id_type}, cosine double, cluster int"
+        empty_pairs = local_frame(
+            spark, [], f"a {id_type}, b {id_type}, cosine double, cluster int"
         )
         result = {"out": df}
         if config.get("return_pairs"):
             result["pairs"] = empty_pairs
         if config.get("return_assignments"):
-            result["assignments"] = spark.createDataFrame(
-                [], f"{id_col} {id_type}, cluster int"
+            result["assignments"] = local_frame(
+                spark, [], f"{id_col} {id_type}, cluster int"
             )
         return result if len(result) > 1 else df
     base = _spread(spark, df).select(

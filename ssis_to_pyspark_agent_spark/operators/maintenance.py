@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ssis_to_pyspark_agent_spark.operators import operator
+from ssis_to_pyspark_agent_spark.operators import local_frame, operator
 
 
 @operator("maintenance.compact")
@@ -145,7 +145,8 @@ def vacuum(spark: SparkSession, inputs, config, context) -> DataFrame:
                 ))
             elif st.isDirectory() and depth < max_depth:
                 frontier.append((p, depth + 1))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "path string, size_bytes bigint, modified_ts bigint, "
         "deleted boolean",

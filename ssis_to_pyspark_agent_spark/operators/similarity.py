@@ -130,6 +130,38 @@ def _hyperplane_bucket(
     return F.array(*buckets)
 
 
+def _lsh_projection(planes: list, dim: int, n_tables: int, n_bits: int):
+    """(dim x tables*bits) float64 projection matrix of the hyperplanes,
+    table-major — the operand `_bucket_ids` multiplies by."""
+    import numpy as np
+
+    return np.array(
+        [
+            [planes[t][j][d] for d in range(dim)]
+            for t in range(n_tables)
+            for j in range(n_bits)
+        ],
+        dtype=np.float64,
+    ).T
+
+
+def _bucket_ids(v, proj, n_bits: int, quantize: int | None):
+    """(n x tables) int64 LSH bucket ids of the rows of `v`, one BLAS
+    matmul for the batch. Sign rule (dot >= 0, NaN -> 0) matches
+    `_hyperplane_bucket`. With integer planes + `quantize`, the
+    int-valued float64 products stay < 2^53, so the matmul is exact
+    integer arithmetic in any order (oracle-identical). The ONE
+    definition of the numpy bucket math: `_bucket_frame` and
+    topk_lsh's fused kernel both call it."""
+    import numpy as np
+
+    if quantize:
+        v = _half_up(v, quantize)
+    signs = ((v @ proj) >= 0).reshape(len(v), proj.shape[1] // n_bits, n_bits)
+    pow2 = np.left_shift(1, np.arange(n_bits, dtype=np.int64))
+    return (signs.astype(np.int64) * pow2).sum(axis=2)
+
+
 def _bucket_frame(
     df: DataFrame,
     id_name: str,
@@ -143,28 +175,18 @@ def _bucket_frame(
     quantize: int | None = None,
 ) -> DataFrame:
     """Exploded LSH bucket rows (id[, vec], _table, _bucket) via one BLAS
-    matmul per Arrow batch: (batch x dim) @ (dim x tables*bits) -> sign
-    bits -> bucket ids. Replaces the expr formulation (tables*bits
-    zip_with/aggregate dot folds per row, each allocating an intermediate
-    array) — measured 4.8s -> 0.8s at 200k x dim64 x 8x10. Sign rule
-    (dot >= 0, NaN -> 0) matches `_hyperplane_bucket`; bucket ids can
-    differ from the expr path only for dots within float-sum ulp of 0 —
-    candidate-set recall, not correctness, both paths verify with exact
-    cosine."""
+    matmul per Arrow batch (`_bucket_ids`). Replaces the expr formulation
+    (tables*bits zip_with/aggregate dot folds per row, each allocating an
+    intermediate array) — measured 4.8s -> 0.8s at 200k x dim64 x 8x10.
+    Bucket ids can differ from the expr path only for float planes and
+    dots within float-sum ulp of 0 — candidate-set recall, not
+    correctness, both paths verify with exact cosine."""
     import numpy as np
     import pandas as pd
 
     if planes is None:
         planes = _hyperplanes(dim, n_tables, n_bits, seed)
-    proj = np.array(
-        [
-            [planes[t][j][d] for d in range(dim)]
-            for t in range(n_tables)
-            for j in range(n_bits)
-        ],
-        dtype=np.float64,
-    ).T  # dim x (tables*bits)
-    pow2 = np.array([1 << j for j in range(n_bits)], dtype=np.int64)
+    proj = _lsh_projection(planes, dim, n_tables, n_bits)
     id_type = df.schema[id_name].dataType.simpleString()
     vec_type = df.schema[vec_name].dataType.simpleString()
     schema = (
@@ -177,13 +199,7 @@ def _bucket_frame(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = _vecmat(pdf[vec_name])
-            if quantize:
-                v = _half_up(v, quantize)
-            # int-valued float64 products stay < 2^53 -> the matmul is
-            # exact integer arithmetic in any order (oracle-identical)
-            signs = ((v @ proj) >= 0).reshape(len(pdf), n_tables, n_bits)
-            buckets = (signs.astype(np.int64) * pow2).sum(axis=2)
+            buckets = _bucket_ids(_vecmat(pdf[vec_name]), proj, n_bits, quantize)
             data = {id_name: np.repeat(pdf[id_name].values, n_tables)}
             if keep_vec:
                 data[vec_name] = np.repeat(pdf[vec_name].values, n_tables)
@@ -329,7 +345,16 @@ def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
 def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
     """LSH-bucketed ANN: corpus and queries hashed with the same seeded
     hyperplanes; candidates = bucket collisions in any table; exact cosine
-    re-rank of candidates only."""
+    re-rank of candidates only.
+
+    Quantized numpy path (`quantize` set, bucket_impl='numpy', the
+    default): the query batch — small by construction, the same contract
+    as topk_bruteforce, and what the broadcast join collected anyway — is
+    collected and bucketed on the driver, and the corpus is scored in ONE
+    Arrow pass (`_lsh_score_frame`: bucket, look up the colliding
+    queries, dedupe, quantized cosine). The non-quantized and
+    bucket_impl='expr' paths bucket both sides, broadcast-join on
+    (table, bucket) and score the deduplicated candidates."""
     corpus, queries = inputs[0], inputs[1]
     qid = config.get("query_id_col", "query_id")
     qv = config.get("query_vec_col", config["vec_col"])
@@ -366,7 +391,22 @@ def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if config.get("bucket_impl", "numpy") == "numpy":
+    quantize = config.get("quantize")
+    numpy_impl = config.get("bucket_impl", "numpy") == "numpy"
+    if numpy_impl and quantize:
+        if planes is None:
+            planes = _hyperplanes(dim, n_tables, n_bits, seed)
+        scored = _lsh_score_frame(
+            c_named, q_named.collect(),
+            _lsh_projection(planes, dim, n_tables, n_bits), n_bits,
+            plane_quant, quantize,
+            id_type=c_named.schema["corpus_id"].dataType.simpleString(),
+            qid_type=q_named.schema["query_id"].dataType.simpleString(),
+        )
+        return _topk(scored, "query_id", config.get("k", 10)).select(
+            "query_id", "corpus_id", "cosine", "rank"
+        )
+    if numpy_impl:
         c = _bucket_frame(
             c_named, "corpus_id", "_cv", dim, n_tables, n_bits, seed,
             keep_vec=True, planes=planes, quantize=plane_quant,
@@ -398,10 +438,89 @@ def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
         .dropDuplicates(["query_id", "corpus_id"])
     )
     scored = _pair_cosine_frame(
-        cand, "_cv", "_qv", ["query_id", "corpus_id"], config.get("quantize")
+        cand, "_cv", "_qv", ["query_id", "corpus_id"], quantize
     )
     return _topk(scored, "query_id", config.get("k", 10)).select(
         "query_id", "corpus_id", "cosine", "rank"
+    )
+
+
+def _lsh_score_frame(
+    c: DataFrame,
+    q_rows: list,
+    proj,
+    n_bits: int,
+    plane_quant: int | None,
+    quantize: int,
+    id_type: str,
+    qid_type: str,
+) -> DataFrame:
+    """(query_id, corpus_id, cosine) for every LSH collision, in ONE
+    Arrow pass over the corpus `c` (corpus_id, _cv). The collected query
+    batch `q_rows` (query_id, _qv) is bucketed on the driver and indexed
+    per table as sorted bucket ids; each corpus batch is bucketed
+    (`_bucket_ids`), its colliding queries are looked up per table with
+    a binary search, each (row, query_id) pair is kept once however many
+    tables it collides in, and the pairs are scored with
+    `_rowwise_qcos` — the candidates `_pair_cosine_frame` would score
+    after the bucket join, with the same values. Replaces two bucket
+    passes, the bucket join and the pair-scoring pass (one Python stage
+    instead of three, NOTES invariant 23).
+
+    A query id that occurs on several query rows collides through any
+    of them and is scored with its first row's vector."""
+    import numpy as np
+    import pandas as pd
+
+    n_q = len(q_rows)
+    if n_q:
+        first: dict = {}
+        canon = np.array(
+            [first.setdefault(r["query_id"], j) for j, r in enumerate(q_rows)]
+        )
+        q_ids = np.asarray([r["query_id"] for r in q_rows])
+        qm = np.array([list(r["_qv"]) for r in q_rows], dtype=np.float64)
+        qq = _half_up(qm, quantize)
+        q_buckets = _bucket_ids(qm, proj, n_bits, plane_quant)
+        # per table: query rows sorted by bucket id, for searchsorted
+        tables = []
+        for t in range(q_buckets.shape[1]):
+            order = np.argsort(q_buckets[:, t], kind="stable")
+            tables.append((q_buckets[order, t], order))
+
+    def gen(batches):
+        for pdf in batches:
+            if not len(pdf) or not n_q:
+                continue
+            v = _vecmat(pdf["_cv"])
+            buckets = _bucket_ids(v, proj, n_bits, plane_quant)
+            keys = []
+            for t, (sorted_b, order) in enumerate(tables):
+                lo = np.searchsorted(sorted_b, buckets[:, t], "left")
+                cnt = np.searchsorted(sorted_b, buckets[:, t], "right") - lo
+                total = int(cnt.sum())
+                if not total:
+                    continue
+                # row i matches sorted positions lo[i] .. lo[i]+cnt[i]-1;
+                # pairs are keyed by the query's canonical (first) row
+                rows = np.repeat(np.arange(len(pdf)), cnt)
+                pos = (np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+                       + np.repeat(lo, cnt))
+                keys.append(rows * n_q + canon[order[pos]])
+            if not keys:
+                continue
+            key = np.unique(np.concatenate(keys))
+            rows, qj = key // n_q, key % n_q
+            cos = _rowwise_qcos(_half_up(v[rows], quantize), qq[qj])
+            yield pd.DataFrame({
+                "query_id": q_ids[qj],
+                "corpus_id": pdf["corpus_id"].to_numpy()[rows],
+                "cosine": cos,
+            })
+
+    return c.mapInPandas(
+        gen,
+        schema=f"query_id {qid_type}, corpus_id {id_type}, cosine double",
     )
 
 
@@ -428,7 +547,6 @@ def _pair_cosine_frame(
         return df.select(
             *keep, _cosine(F.col(vec_a), F.col(vec_b), None).alias("cosine")
         )
-    import numpy as np
     import pandas as pd
 
     fields = ", ".join(
@@ -445,15 +563,24 @@ def _pair_cosine_frame(
                 out["cosine"] = pd.Series(dtype="float64")
                 yield out
                 continue
-            a, b = _qm(pdf[vec_a]), _qm(pdf[vec_b])
-            dots = np.einsum("ij,ij->i", a, b)
-            na = np.sqrt(np.einsum("ij,ij->i", a, a))
-            nb = np.sqrt(np.einsum("ij,ij->i", b, b))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out["cosine"] = dots / (na * nb)
+            out["cosine"] = _rowwise_qcos(_qm(pdf[vec_a]), _qm(pdf[vec_b]))
             yield out
 
     return df.mapInPandas(gen, schema=f"{fields}, cosine double")
+
+
+def _rowwise_qcos(a, b):
+    """Cosine of each row of `a` with the same row of `b`, both
+    `_half_up`-quantized: int-valued float64 dots/norms (< 2^53, exact
+    in any summation order) and the same dot/(sqrt*sqrt) IEEE finish as
+    `_cosine(..., quantize)`; zero vectors give the identical NaN."""
+    import numpy as np
+
+    dots = np.einsum("ij,ij->i", a, b)
+    na = np.sqrt(np.einsum("ij,ij->i", a, a))
+    nb = np.sqrt(np.einsum("ij,ij->i", b, b))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / (na * nb)
 
 
 def _half_up(m, quantize: int):
@@ -481,53 +608,75 @@ def _vecmat(col) -> "object":
         return np.array(list(map(list, col)), dtype=np.float64)
 
 
+def _centroid_order(vq, cm):
+    """Centroid indices of each row of `vq`, nearest first by quantized
+    cosine, ties broken by ascending centroid id (`vq`, `cm`: `_half_up`
+    matrices). The ONE definition of the numpy centroid ranking, shared
+    by `_ivf_assign_frame`, topk_ivf's driver-side probe lists and
+    `_ivf_score_frame`'s corpus assignment.
+
+    Value-identical to the `_cosine(vec, cent, quantize)` expr ranking:
+    quantized dots/norms are exact integer arithmetic in float64 (< 2^53),
+    and the final dot/(sqrt*sqrt) runs the same IEEE ops; NaN (zero
+    vector) sorts last in both np.argsort and array_sort-on-negated
+    struct."""
+    import numpy as np
+
+    vnorm = np.sqrt((vq * vq).sum(axis=1))
+    cent_norm = np.sqrt((cm * cm).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = (vq @ cm.T) / (vnorm[:, None] * cent_norm[None, :])
+    return np.argsort(-cos, axis=1, kind="stable")
+
+
 def _ivf_score_frame(
-    c_assigned: DataFrame,
+    c: DataFrame,
     q_rows: list,
+    cents: list,
     quantize: int,
+    nprobe: int,
     id_type: str,
     qid_type: str,
 ) -> DataFrame:
-    """Score every assigned corpus row against the queries probing its
-    list, WITHOUT materializing per-pair vectors: the per-list query
-    matrices (bounded — a query batch is small by construction, the
-    same contract as topk_bruteforce) ride into the kernel as a plain
-    dict; corpus vectors cross Arrow exactly once and each batch-group
-    is one BLAS matmul. Replaces a candidate join whose per-pair vector
-    transfer dominated (measured 47s -> ~4s on 6.3M candidate pairs).
+    """(query_id, corpus_id, cosine) for every corpus row of `c`
+    (corpus_id, _cv) against the queries probing its list, in ONE Arrow
+    pass. The collected query batch `q_rows` (query_id, _qv) — bounded,
+    a query batch is small by construction, the same contract as
+    topk_bruteforce — ranks its `nprobe` lists on the driver; the
+    per-list query matrices ride into the kernel as a plain dict. Each
+    corpus batch is assigned to its nearest centroid (`_centroid_order`)
+    and each batch-group is one BLAS matmul, so corpus vectors cross
+    Arrow exactly once and no per-pair vector is materialized (a
+    candidate join's per-pair vector transfer measured 47s -> ~4s on
+    6.3M candidate pairs).
 
-    `q_rows`: collected (query_id, _qv, _cids array) rows. Quantized
-    cosine values are identical to `_cosine(...)` (exact ints + same
-    IEEE finish)."""
+    Quantized cosine values are identical to `_cosine(...)` (exact ints +
+    same IEEE finish)."""
     import numpy as np
     import pandas as pd
 
-    qmap: dict[int, list] = {}
-    for r in q_rows:
-        for cid in r["_cids"]:
-            qmap.setdefault(int(cid), []).append(r)
+    cm = _half_up(cents, quantize)
     packed = {}
-    for cid, rows in qmap.items():
-        qm = _half_up([list(r["_qv"]) for r in rows], quantize)
-        packed[cid] = (
-            np.asarray([r["query_id"] for r in rows]),
-            qm,
-            np.sqrt((qm * qm).sum(axis=1)),
-        )
+    if q_rows and len(cents):
+        qm = _half_up([list(r["_qv"]) for r in q_rows], quantize)
+        qids = np.asarray([r["query_id"] for r in q_rows])
+        qnorm = np.sqrt((qm * qm).sum(axis=1))
+        qmap: dict[int, list] = {}
+        for j, probes in enumerate(_centroid_order(qm, cm)[:, :nprobe]):
+            for cid in probes:
+                qmap.setdefault(int(cid), []).append(j)
+        packed = {
+            cid: (qids[js], qm[js], qnorm[js]) for cid, js in qmap.items()
+        }
 
     def gen(batches):
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"query_id": pd.Series(dtype="object"),
-                     "corpus_id": pdf["corpus_id"],
-                     "cosine": pd.Series(dtype="float64")}
-                )
+            if not len(pdf) or not packed:
                 continue
             v = _half_up(_vecmat(pdf["_cv"]), quantize)
             vnorm = np.sqrt((v * v).sum(axis=1))
             ids = pdf["corpus_id"].to_numpy()
-            cids = pdf["_cid"].to_numpy()
+            cids = _centroid_order(v, cm)[:, 0]
             outs = []
             for cid in np.unique(cids):
                 hit = packed.get(int(cid))
@@ -543,14 +692,10 @@ def _ivf_score_frame(
                     "corpus_id": np.repeat(ids[idx], len(qids)),
                     "cosine": cos.ravel(),
                 }))
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame({"query_id": [], "corpus_id": [],
-                                   "cosine": pd.Series(dtype="float64")})
-            )
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
 
-    return c_assigned.mapInPandas(
+    return c.mapInPandas(
         gen,
         schema=f"query_id {qid_type}, corpus_id {id_type}, cosine double",
     )
@@ -565,21 +710,15 @@ def _ivf_assign_frame(
     n: int,
 ) -> DataFrame:
     """(id, vec, _cids: array<int>) — each row's top-`n` centroids by
-    quantized cosine, ties broken by ascending centroid id. Arrow-batched
-    numpy: one matmul per batch against the (C x dim) centroid matrix.
-
-    Value-identical to the `_cosine(vec, cent, quantize)` expr ranking:
-    quantized dots/norms are exact integer arithmetic in float64 (< 2^53),
-    and the final dot/(sqrt*sqrt) runs the same IEEE ops; NaN (zero
-    vector) sorts last in both np.argsort and array_sort-on-negated
-    struct. Replaces a per-row interpreted expression that re-quantized
-    the vector and recomputed its norm once PER CENTROID (measured 4.1s
-    -> 0.4s warm on 2k rows x 16 centroids, identical assignment)."""
-    import numpy as np
+    quantized cosine, ties broken by ascending centroid id
+    (`_centroid_order`). Arrow-batched numpy: one matmul per batch
+    against the (C x dim) centroid matrix. Replaces a per-row
+    interpreted expression that re-quantized the vector and recomputed
+    its norm once PER CENTROID (measured 4.1s -> 0.4s warm on 2k rows x
+    16 centroids, identical assignment)."""
     import pandas as pd
 
     cm = _half_up(cents, quantize)
-    cent_norm = np.sqrt((cm * cm).sum(axis=1))
     id_type = df.schema[id_name].dataType.simpleString()
     vec_type = df.schema[vec_name].dataType.simpleString()
 
@@ -592,10 +731,7 @@ def _ivf_assign_frame(
                 )
                 continue
             vq = _half_up(_vecmat(pdf[vec_name]), quantize)
-            vnorm = np.sqrt((vq * vq).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (vq @ cm.T) / (vnorm[:, None] * cent_norm[None, :])
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :n]
+            order = _centroid_order(vq, cm)[:, :n]
             yield pd.DataFrame(
                 {id_name: pdf[id_name], vec_name: pdf[vec_name],
                  "_cids": [row.astype("int32") for row in order]}
@@ -615,7 +751,11 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     lists => better recall at the same nprobe). Corpus rows index to their
     nearest centroid; queries scan only the `nprobe` nearest lists.
 
-    The assignment join shuffles on centroid_id — at 100 TB, write the
+    Quantized numpy path (`quantize` set, assign_impl='numpy', the
+    default): the queries are collected and ranked on the driver, and
+    the corpus is assigned and scored in ONE Arrow pass with no shuffle
+    (`_ivf_score_frame`). The other paths join the assigned corpus to
+    the exploded probe lists on centroid_id — at 100 TB, write the
     assigned corpus partitioned by centroid_id once and amortize across
     query batches."""
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
@@ -655,20 +795,14 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
     if quantize and config.get("assign_impl", "numpy") == "numpy":
-        cents = [list(r["_centv"]) for r in cent_rows]
-        c_assigned = _ivf_assign_frame(
-            c, "corpus_id", "_cv", cents, quantize, 1
-        ).withColumn("_cid", F.col("_cids")[0]).drop("_cids")
         # the query batch is bounded by construction (same contract as
-        # topk_bruteforce): collect its probe lists and score corpus
-        # lists against per-list query matrices in one kernel — no
-        # per-pair vector join at all
-        q_rows = _ivf_assign_frame(
-            q_named, "query_id", "_qv", cents, quantize, nprobe
-        ).collect()
+        # topk_bruteforce): collect it, rank its probe lists on the
+        # driver and score corpus lists against per-list query matrices
+        # in one kernel — no per-pair vector join at all
         scored = _ivf_score_frame(
-            c_assigned, q_rows, quantize,
-            id_type=c_assigned.schema["corpus_id"].dataType.simpleString(),
+            c, q_named.collect(), [list(r["_centv"]) for r in cent_rows],
+            quantize, nprobe,
+            id_type=c.schema["corpus_id"].dataType.simpleString(),
             qid_type=q_named.schema["query_id"].dataType.simpleString(),
         )
         return _topk(scored, "query_id", config.get("k", 10)).select(

@@ -777,6 +777,47 @@ class TestSimilarity:
         # self always collides with itself -> top-1 must match exactly
         assert bf1 == lsh1
 
+    def test_lsh_fused_numpy_matches_expr(self, spark):
+        # the quantized numpy path buckets the queries on the driver and
+        # scores the corpus in one fused kernel; with md5 integer planes
+        # its rows must equal the expr path's bucket join + dedupe +
+        # pair scoring exactly. 2 bits x 8 tables: every query collides
+        # with most rows in several tables (exercises the pair dedupe);
+        # the all-zero vector (id 300) is both a corpus row and a query
+        # and scores NaN (null once through Arrow) against everything.
+        # Query 1 arrives twice and must still give one row per pair.
+        # k covers every candidate.
+        import math
+        import random
+
+        rng = random.Random(13)
+        data = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)]
+        data.append((300, [0.0] * 16))
+        df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+        q = df.filter("vec_id < 5 OR vec_id = 300").unionByName(
+            df.filter("vec_id = 1")
+        )
+        cfg = dict(id_col="vec_id", vec_col="embedding",
+                   query_id_col="vec_id", query_vec_col="embedding",
+                   k=len(data), dim=16, lsh_tables=8, lsh_bits=2,
+                   hyperplanes="md5", quantize=10000)
+        got = {}
+        for impl in ("numpy", "expr"):
+            out = run("similarity.topk_lsh", spark, [df, q],
+                      bucket_impl=impl, **cfg)
+            got[impl] = sorted(
+                (r.query_id, r.corpus_id, r.rank,
+                 "nan" if r.cosine is not None and math.isnan(r.cosine)
+                 else r.cosine)
+                for r in out.collect()
+            )
+        assert got["numpy"] == got["expr"]
+        # collisions in several tables still yield one row per pair
+        pairs = [(qi, ci) for qi, ci, _, _ in got["numpy"]]
+        assert len(pairs) == len(set(pairs))
+        assert {qi for qi, _ in pairs} == {0, 1, 2, 3, 4, 300}
+        assert any(ci == 300 for _, ci in pairs)
+
 
 class TestTextOps:
     def test_lang_id(self, spark):
@@ -3638,6 +3679,56 @@ class TestDedupCluster:
         out = run("dedup.cluster", spark, [ids, pairs], id_col="doc_id")
         comps = {r.comp for r in out["components"].collect()}
         assert comps == {0}  # one component, min label 0
+
+
+class TestPythonStageBudget:
+    """Every Python worker task pays a fixed setup cost before it reads
+    a row (NOTES invariant 23), so driver-sized data stays in JVM local
+    relations and the curation queries' Python stages are pinned by
+    plan shape."""
+
+    @staticmethod
+    def _optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_driver_cc_labels_are_local_relations(self, spark):
+        from pyspark.sql.types import LongType, StringType, StructField
+
+        from ssis_to_pyspark_agent_spark.operators.dedup import (
+            _driver_cc_labels,
+        )
+
+        cases = [
+            (LongType(), [(1, 2), (2, 3), (7, 5)],
+             {(1, 1), (2, 1), (3, 1), (5, 5), (7, 5)}),
+            (StringType(), [("b", "a"), ("é", "z")],
+             {("a", "a"), ("b", "a"), ("z", "z"), ("é", "z")}),
+            (LongType(), [], set()),
+        ]
+        for dtype, edges, want in cases:
+            lbl = _driver_cc_labels(spark, edges, StructField("a", dtype))
+            plan = self._optimized(lbl)
+            assert plan.startswith("LocalRelation"), plan
+            assert [f.dataType for f in lbl.schema.fields] == [dtype, dtype]
+            assert {(r.x, r.comp) for r in lbl.collect()} == want
+
+    def test_q37_one_python_stage_per_similarity_operator(self, spark, sf_dir):
+        # brute force is JVM expressions; topk_lsh and topk_ivf each run
+        # exactly one corpus-side kernel (the queries are collected,
+        # bucketed / ranked on the driver)
+        from ssis_to_pyspark_agent_spark.queries import q37
+
+        plan = self._optimized(q37(spark, sf_dir))
+        assert plan.count("MapInPandas") == 2, plan
+
+    def test_q31_scans_no_python_backed_relation(self, spark, sf_dir):
+        # the driver union-find labels are a LocalRelation, so rescanning
+        # them (components, holdout split) starts no Python task
+        from ssis_to_pyspark_agent_spark.queries import q31
+
+        plan = self._optimized(q31(spark, sf_dir))
+        assert "LogicalRDD" not in plan, plan
+        spark.catalog.clearCache()
 
 
 class TestSimilarityPandasPath:
